@@ -53,7 +53,7 @@ object ClusterCheck {
     "m13_delete_keys",
     // LWW upsert + MERGE INTO: seq-ordered merge ties and the
     // generation-aware (per-reader) anti-join run inside executor
-    // RunSpecs; the Catalyst path's filename->seq broadcast must ship
+    // RunSpecs
     "m14_upsert_lww", "m16_merge_into",
     // deep clone: the executor-parallel file copy ships the serializable
     // Hadoop conf + GraftFS closure into executor JVMs
@@ -66,10 +66,8 @@ object ClusterCheck {
     // ordering into executor DataWriters (leaf counting, sorted writes)
     "t47_stream_cdf", "x15_sql_time_travel", "t48_stream_sink",
     // round 14: a shallow clone's scan ships EXTERNAL (absolute-path)
-    // file references inside executor RunSpecs, and the tombstone
-    // anti-join's basename keying must match executor-side
-    // input_file_name(); CTAS writes through the staged table's normal
-    // ingest dataflow before the publish rename
+    // file references inside executor RunSpecs; CTAS writes through
+    // the staged table's normal ingest dataflow before the publish rename
     "x22_shallow_clone", "x21_sql_ctas")
 
   /** Canonical content hash: columns sorted by name, every cell cast to

@@ -1,7 +1,7 @@
 package graft.core
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.functions.{col, concat, length, lit}
 
 /** A range over one row-key dimension, canonically min-inclusive /
   * max-exclusive. `None` bounds mean unbounded.
@@ -55,6 +55,15 @@ final case class KeyRange(
       case (None, Some(b)) => b
       case (None, None) => lit(true)
     }
+  }
+
+  /** The single Int/Long/String value this range admits, in exact
+    * (`[v, v]`) or canonical (`[v, succ(v))`) form; None otherwise.
+    */
+  def point: Option[Any] = min match {
+    case Some(v @ (_: Int | _: Long | _: String)) if minInclusive &&
+        canonical.max == KeyRange.exact(field, v).canonical.max => Some(v)
+    case _ => None
   }
 
   /** Overlap test on canonical ranges (both min-incl/max-excl):
@@ -137,18 +146,77 @@ final case class Region(ranges: Seq[KeyRange]) {
 
 object Region {
   def apply(first: KeyRange, rest: KeyRange*): Region = Region(first +: rest)
-  /** OR of several regions as one Catalyst predicate — combined as a
-    * BALANCED tree: a linear fold gives expression depth N, and a
-    * many-key point-lookup query (thousands of regions, e.g. the LSH
-    * index serve path) then blows the analyzer stack; a balanced tree
-    * is depth log N.
+
+  /** Above this many point regions, a query is a key batch (the
+    * LSH-index / serving-tier shape) rather than a handful of ranges:
+    * [[anyOf]] tests membership by hash, and the scan reads the batch's
+    * bounding box instead of OR-ing the points.
     */
-  def anyOf(regions: Seq[Region]): Column = {
-    var level: Vector[Column] = regions.map(_.toColumn).toVector
-    if (level.isEmpty) return lit(true)
-    while (level.length > 1)
-      level = level.grouped(2).map(g =>
-        if (g.length == 2) g(0) || g(1) else g(0)).toVector
-    level.head
+  val ManyPoints = 32
+
+  /** A key batch — more than [[ManyPoints]] point regions over one
+    * field sequence — as its key tuples and their bounding box (per
+    * field, lowest to highest value); None for any other region list.
+    */
+  def keyBatch(regions: Seq[Region]): Option[(Seq[Seq[Any]], Region)] =
+    if (regions.length <= ManyPoints) None
+    else {
+      val fields = regions.head.ranges.map(_.field)
+      val keys = regions.map(r =>
+        if (r.ranges.map(_.field) != fields) None
+        else {
+          val vs = r.ranges.map(_.point)
+          if (vs.forall(_.isDefined)) Some(vs.map(_.get)) else None
+        })
+      if (!keys.forall(_.isDefined)) None
+      else {
+        val tuples = keys.map(_.get)
+        val order = Ordering.fromLessThan[Any](KeyOrdering.compare(_, _) < 0)
+        Some((tuples, Region(fields.indices.map { i =>
+          val vs = tuples.map(_(i))
+          KeyRange(fields(i), Some(vs.min(order)), minInclusive = true,
+            Some(vs.max(order)), maxInclusive = true)
+        })))
+      }
+    }
+
+  /** OR of several regions as one Catalyst predicate.
+    *
+    * A key batch ([[keyBatch]]) as an OR chain costs O(regions) per
+    * ROW and a giant codegen tree per QUERY; instead the key tuple is
+    * encoded once per row and tested against an InSet (O(1) hash probe),
+    * ANDed with the batch's bounding box so parquet row-group pruning
+    * still gets pushable range bounds. Each stringified field is
+    * LENGTH-PREFIXED (char count, U+0001, value) before concatenation,
+    * which makes the encoding injective for arbitrary string contents —
+    * a bare separator would conflate ('xy','z') with ('x','yz'). The
+    * prefix counts Unicode code points on both sides (Spark `length` ==
+    * UTF8String.numChars; driver `codePointCount`), and int/long/string
+    * `cast("string")` equals the driver-side `String.valueOf`, so
+    * membership is exact key equality. A null field encodes to a null
+    * (unmatchable) key, never a conflated one.
+    *
+    * Otherwise the regions combine as a BALANCED tree: a linear fold
+    * gives expression depth N, which blows the analyzer stack at
+    * thousands of regions; a balanced tree is depth log N.
+    */
+  def anyOf(regions: Seq[Region]): Column = keyBatch(regions) match {
+    case Some((keys, box)) =>
+      val enc = concat(regions.head.ranges.flatMap { r =>
+        val s = col(r.field).cast("string")
+        Seq(length(s).cast("string"), lit("\u0001"), s)
+      }: _*)
+      val keyStrs = keys.map(_.map { v =>
+        val s = String.valueOf(v)
+        s"${s.codePointCount(0, s.length)}\u0001$s"
+      }.mkString)
+      box.toColumn && enc.isInCollection(keyStrs)
+    case None =>
+      var level: Vector[Column] = regions.map(_.toColumn).toVector
+      if (level.isEmpty) return lit(true)
+      while (level.length > 1)
+        level = level.grouped(2).map(g =>
+          if (g.length == 2) g(0) || g(1) else g(0)).toVector
+      level.head
   }
 }

@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * `OPTIMIZE ZORDER BY`). On a 100-TB table a box covering p% of each
   * dimension touches ~p²-ish of the z-range volume instead of 100% of
   * the files, and each decomposed range rides the engine's existing
-  * leaf-pruned sorted scan (`QueryExecutor` regions → parquet
+  * leaf-pruned sorted scan (`GraftTable.query` regions → parquet
   * row-group/page filters).
   *
   * Bit layout: x occupies even bits, y odd bits. Both the driver-side

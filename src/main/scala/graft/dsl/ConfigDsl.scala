@@ -65,18 +65,7 @@ object ConfigDsl {
     * widens sum(int) to long; the reference restores declared types the
     * same way, datafusion.rs add_numeric_casts:294).
     */
-  def aggColumns(specs: Seq[AggSpec], schema: GraftSchema): Seq[Column] =
-    aggColumnsOrdered(specs, schema, None)
-
-  /** Aggregation columns with an optional write-order column for the
-    * order-sensitive `last` op: with `seqCol` (the per-row file sequence
-    * the query path derives from input_file_name), `last` becomes
-    * max_by(value, seq) — the newest write generation wins exactly as in
-    * the seq-ordered streaming merge. Without it (single-generation
-    * contexts), plain `last` over the group.
-    */
-  def aggColumnsOrdered(specs: Seq[AggSpec], schema: GraftSchema,
-      seqCol: Option[Column]): Seq[Column] = specs.map { s =>
+  def aggColumns(specs: Seq[AggSpec], schema: GraftSchema): Seq[Column] = specs.map { s =>
     val f = schema.field(s.field)
     val c = col(s.field)
     val agg = (s.op, f.dataType) match {
@@ -84,10 +73,7 @@ object ConfigDsl {
       case ("sum", _) => sum(c).cast(f.dataType)
       case ("min", _) => min(c)
       case ("max", _) => max(c)
-      case ("last", _) => seqCol match {
-        case Some(sq) => max_by(c, sq)
-        case None => last(c)
-      }
+      case ("last", _) => last(c)
       case ("map_sum", _) => MapMergeAgg.map_sum(c)
       case ("map_min", _) => MapMergeAgg.map_min(c)
       case ("map_max", _) => MapMergeAgg.map_max(c)

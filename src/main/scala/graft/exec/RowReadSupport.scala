@@ -16,12 +16,13 @@ import org.apache.spark.unsafe.types.UTF8String
 import graft.core.GraftField
 
 /** Parquet ReadSupport materializing records STRAIGHT into Catalyst
-  * `InternalRow`s for the graft type surface (int/long/string/binary +
-  * one-level list/map) — no intermediate `Group` object tree, and string
-  * columns decode each dictionary entry to `UTF8String` once per page
-  * instead of once per row. This is what lifts the sorted-run merge from
-  * Java-engine throughput toward the reference's vectorized-engine
-  * range (BASELINE.md: Java 170-400k rows/s vs DataFusion 2.9-4.5M).
+  * `InternalRow`s for the graft type surface (int/long/float/double/
+  * string/binary + one-level list/map) — no intermediate `Group` object
+  * tree, and string columns decode each dictionary entry to
+  * `UTF8String` once per page instead of once per row. This is what
+  * lifts the sorted-run merge from Java-engine throughput toward the
+  * reference's vectorized-engine range (BASELINE.md: Java 170-400k
+  * rows/s vs DataFusion 2.9-4.5M).
   */
 private[exec] final class RowReadSupport(fields: Seq[GraftField])
   extends ReadSupport[InternalRow] {
@@ -76,7 +77,7 @@ private final class RowMaterializer(requested: MessageType, fields: Seq[GraftFie
   }
 
   private def makeConverter(dt: DataType, pos: Int): Converter = dt match {
-    case IntegerType | LongType | StringType | BinaryType =>
+    case IntegerType | LongType | FloatType | DoubleType | StringType | BinaryType =>
       new SlotConverter(dt, v => values(pos) = v)
     case ArrayType(et, _) => new ListConverter(et, v => values(pos) = v)
     case MapType(kt, vt, _) => new MapConverter(kt, vt, v => values(pos) = v)
@@ -114,6 +115,8 @@ private final class SlotConverter(dt: DataType, sink: Any => Unit)
   override def addValueFromDictionary(id: Int): Unit = sink(dict(id))
   override def addInt(v: Int): Unit = sink(v)
   override def addLong(v: Long): Unit = sink(v)
+  override def addFloat(v: Float): Unit = sink(v)
+  override def addDouble(v: Double): Unit = sink(v)
   override def addBinary(b: Binary): Unit = dt match {
     case StringType => sink(UTF8String.fromBytes(b.getBytes))
     case _ => sink(b.getBytes)

@@ -741,10 +741,9 @@ private[exec] final class StreamingKeyAggIterator(
 
   private def mergeExternal(op: String, dt: DataType, a: Any, b: Any): Any = {
     // LWW: the newer write wins EVEN WHEN NULL — a nullable `last`
-    // column's explicit null overwrites, exactly like the Catalyst
-    // path's max_by (which keeps the value of the max-seq row, null or
-    // not). The null short-circuits below would resurrect the older
-    // value instead.
+    // column's explicit null overwrites (the value of the newest row,
+    // null or not). The null short-circuits below would resurrect the
+    // older value instead.
     if (op == "last") return b
     if (a == null) return b
     if (b == null) return a

@@ -131,7 +131,15 @@ final class Ingest(table: GraftTable) {
     // reference's OVERWRITE mode).
     val jobId = UUID.randomUUID().toString.take(8)
     val tmpDir = s"${table.dir}/.ingest-$jobId"
-    ParquetLayout.configure(sorted.write, schema).partitionBy("__gpart").parquet(tmpDir)
+    // On a one-leaf tree the leaf id is a constant. Behind a union (a
+    // CDC feed, say) the optimizer can then drop it from the sort while
+    // partitionBy still requires an ordering on it; the write re-sorts by
+    // the leaf id alone and the key sort is lost. One leaf needs no
+    // partitionBy: write its directory directly.
+    if (numLeaves == 1)
+      ParquetLayout.configure(sorted.drop("__gpart").write, schema)
+        .parquet(s"$tmpDir/__gpart=${tree.leaves.head.id}")
+    else ParquetLayout.configure(sorted.write, schema).partitionBy("__gpart").parquet(tmpDir)
 
     val moved = scala.collection.mutable.ArrayBuffer.empty[(String, String)] // (partitionId, path)
     val (fs, _) = GraftFS.resolve(tmpDir)

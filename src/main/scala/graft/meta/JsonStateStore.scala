@@ -356,8 +356,8 @@ class JsonStateStore private (
 }
 
 /** An immutable historical snapshot of a table's state — the time-travel
-  * read surface. Every query-path consumer (QueryExecutor, DSv2
-  * provider, metrics) only reads, so a snapshot store drops into
+  * read surface. Every query-path consumer (the DSv2 scan behind
+  * GraftTable.query and SQL, metrics) only reads, so a snapshot store drops into
   * [[graft.table.GraftTable]] unchanged; any mutation throws.
   */
 final class SnapshotStateStore(

@@ -228,8 +228,9 @@ trait StateStore {
 /** Read surface shared by the live durable store and historical
   * snapshots: the table's persistent config and the state version, on
   * top of the [[StateStore]] read API. Query-path consumers (the DSv2
-  * scan builder, QueryExecutor, metrics) type against this, so a
-  * time-travel snapshot drops in wherever a live store is read.
+  * scan builder behind both GraftTable.query and SQL, metrics) type
+  * against this, so a time-travel snapshot drops in wherever a live
+  * store is read.
   */
 trait ConfiguredState extends StateStore {
   def aggregationConfig: String

@@ -90,8 +90,6 @@ final class TrackedQueryExecutor(
     val tracker: QueryTrackerStore = new InMemoryQueryTracker,
     clock: () => Long = () => System.currentTimeMillis()) {
 
-  private val executor = new QueryExecutor(table)
-
   /** Shared lifecycle scaffolding: QUEUED → IN_PROGRESS → `body`, whose
     * result reports either a completion row count or a failure; a thrown
     * exception tracks FAILED and rethrows. Both entry points below are
@@ -122,7 +120,7 @@ final class TrackedQueryExecutor(
     */
   def run(queryId: String, q: GraftQuery): DataFrame =
     tracked(queryId) {
-      val df = executor.execute(q)
+      val df = table.query(q)
       (df, df.count())
     } { case (_, n) => (QueryState.Completed, Some(n), None) }._1
 
@@ -136,7 +134,7 @@ final class TrackedQueryExecutor(
     */
   def publish(queryId: String, q: GraftQuery, out: ResultsOutput): ResultsOutputInfo =
     tracked(queryId) {
-      out.publish(queryId, executor.execute(q))
+      out.publish(queryId, table.query(q))
     } { info =>
       info.error match {
         case None => (QueryState.Completed, Some(info.rowCount), None)

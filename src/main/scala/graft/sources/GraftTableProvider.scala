@@ -91,9 +91,15 @@ object GraftBatchTable {
   }
 }
 
+/** `loaded` + `baseRegions`: the read view behind `GraftTable.query` —
+  * the handle's own (possibly time-travel) store, scanned within the
+  * query's regions; read-only, never refreshed.
+  */
 final class GraftBatchTable(dir: String, asOf: Option[Long] = None,
     cdf: Boolean = false,
-    writeOptions: JMap[String, String] = java.util.Collections.emptyMap())
+    writeOptions: JMap[String, String] = java.util.Collections.emptyMap(),
+    loaded: Option[graft.meta.ConfiguredState] = None,
+    baseRegions: Seq[Region] = Nil)
     extends Table with SupportsRead with SupportsWrite
     with org.apache.spark.sql.connector.catalog.SupportsDeleteV2
     with org.apache.spark.sql.connector.catalog.SupportsRowLevelOperations
@@ -103,10 +109,10 @@ final class GraftBatchTable(dir: String, asOf: Option[Long] = None,
   // resolution to a historical state version (SQL `VERSION AS OF` /
   // `TIMESTAMP AS OF` through GraftCatalog): reads serve exactly that
   // version's files/tombstones/schema, and every mutation is refused.
-  private[sources] val store: graft.meta.ConfiguredState = asOf match {
+  private[sources] val store: graft.meta.ConfiguredState = loaded.getOrElse(asOf match {
     case Some(v) => JsonStateStore.loadAt(s"$dir/meta", v)
     case None => JsonStateStore.load(s"$dir/meta")
-  }
+  })
 
   override def name(): String =
     asOf.fold(s"graft.`$dir`")(v => s"graft.`$dir` VERSION AS OF $v")
@@ -126,12 +132,16 @@ final class GraftBatchTable(dir: String, asOf: Option[Long] = None,
     if (store.indexConfig.nonEmpty) m.put("index", store.indexConfig)
     m
   }
+  // the table API reads every column as nullable: value columns are not
+  // null-checked at ingest, and added columns read null in older files
   override def schema(): StructType =
     if (cdf) GraftBatchTable.cdfSchema(store.schema.toStructType)
+    else if (loaded.isDefined)
+      StructType(store.schema.toStructType.fields.map(_.copy(nullable = true)))
     else store.schema.toStructType
   override def capabilities(): java.util.Set[TableCapability] =
     if (cdf) java.util.EnumSet.of(TableCapability.MICRO_BATCH_READ)
-    else if (asOf.isDefined) java.util.EnumSet.of(TableCapability.BATCH_READ)
+    else if (asOf.isDefined || loaded.isDefined) java.util.EnumSet.of(TableCapability.BATCH_READ)
     else java.util.EnumSet.of(TableCapability.BATCH_READ,
       TableCapability.MICRO_BATCH_READ,
       TableCapability.BATCH_WRITE, TableCapability.V1_BATCH_WRITE,
@@ -149,14 +159,16 @@ final class GraftBatchTable(dir: String, asOf: Option[Long] = None,
       v
     }
     if (cdf) return cdfScanBuilder(maxVpt)
+    if (loaded.isDefined) return new GraftScanBuilder(dir, store, maxVpt, baseRegions)
     val fresh = if (asOf.isDefined) store else JsonStateStore.load(s"$dir/meta")
     // A table-level transform is a DataFrame-level hook the row reader
     // cannot run; silently skipping it would change read semantics (for
-    // a SecurityFilter, leak rows). Refuse rather than diverge.
+    // a SecurityFilter, leak rows). Refuse rather than diverge —
+    // GraftTable.query applies it above this same scan.
     require(fresh.transformConfig.trim.isEmpty,
       s"table at $dir has a custom transform (${fresh.transformConfig}); " +
-        "read it through GraftTable.query/toDF — the DSv2 reader cannot apply " +
-        "DataFrame-level transforms")
+        "read it through GraftTable.query/toDF, which applies the transform " +
+        "above the scan")
     new GraftScanBuilder(dir, fresh, maxVpt)
   }
 
@@ -439,14 +451,18 @@ object StatsPred {
   }
 }
 
+/** `baseRegions` (ORed; empty = the whole key space) bound every scan
+  * this builder makes: pushed filters narrow them, never widen them.
+  */
 final class GraftScanBuilder(dir: String, store: graft.meta.ConfiguredState,
-    maxVersionsPerTrigger: Option[Long] = None)
+    maxVersionsPerTrigger: Option[Long] = None, baseRegions: Seq[Region] = Nil)
   extends ScanBuilder with SupportsPushDownFilters with SupportsPushDownRequiredColumns
     with SupportsPushDownAggregates with SupportsPushDownLimit with SupportsPushDownTopN {
 
   private val schema = store.schema
   private var pushed: Array[Filter] = Array.empty
-  private var regions: Seq[Region] = Seq(allKeySpace)
+  private val base: Seq[Region] = if (baseRegions.isEmpty) Seq(allKeySpace) else baseRegions
+  private var regions: Seq[Region] = base
   private var required: StructType = schema.toStructType
   private var pushedLimit: Option[Int] = None
   private var pushedLimitLast: Boolean = false
@@ -680,7 +696,7 @@ final class GraftScanBuilder(dir: String, store: graft.meta.ConfiguredState,
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
     val (usable, _) = filters.partition(RegionFromFilters.supported(schema, _))
     pushed = usable
-    regions = RegionFromFilters.regions(schema, usable)
+    regions = RegionFromFilters.intersect(schema, base, RegionFromFilters.regions(schema, usable))
     statsPreds = StatsPred.fromFilters(schema, filters)
     bloomPreds = BloomPred.fromFilters(store.indexConfig, filters)
     filters // all residual
@@ -839,27 +855,9 @@ final class GraftScan(dir: String, store: graft.meta.ConfiguredState,
 
   override def filter(filters: Array[Filter]): Unit = {
     val usable = filters.filter(RegionFromFilters.supported(schema, _))
-    if (usable.nonEmpty) {
-      val runtime = RegionFromFilters.regions(schema, usable)
-      // AND of the two OR-of-region sets = pairwise intersections that overlap
-      regions = for {
-        a <- regions
-        b <- runtime
-        if a.overlaps(b)
-      } yield Region(schema.rowKeys.map { f =>
-        val ra = a.ranges.find(_.field == f.name).getOrElse(KeyRange.unbounded(f.name)).canonical
-        val rb = b.ranges.find(_.field == f.name).getOrElse(KeyRange.unbounded(f.name)).canonical
-        val min = (ra.min, rb.min) match {
-          case (Some(x), Some(y)) => Some(if (KeyOrdering.compare(x, y) >= 0) x else y)
-          case (x, y) => x.orElse(y)
-        }
-        val max = (ra.max, rb.max) match {
-          case (Some(x), Some(y)) => Some(if (KeyOrdering.compare(x, y) <= 0) x else y)
-          case (x, y) => x.orElse(y)
-        }
-        KeyRange(f.name, min, minInclusive = true, max, maxInclusive = false)
-      })
-    }
+    if (usable.nonEmpty)
+      regions = RegionFromFilters.intersect(schema, regions,
+        RegionFromFilters.regions(schema, usable))
   }
 
   /** Storage-partitioned-join surface (VERDICT r14 #1): report the scan
@@ -1004,12 +1002,18 @@ final class GraftScan(dir: String, store: graft.meta.ConfiguredState,
       val tombPaths = tombsWithSeq.map(_._1)
       if (paths.isEmpty) None
       else {
+        // the query regions reaching this leaf go to the parquet row-group
+        // filter, so a point lookup touches ~one page per column even
+        // inside the leaf; a key batch reads its bounding box instead of a
+        // per-row test over every key. Exact membership is decided above
+        // the scan: Spark re-applies pushed filters, a runtime filter's
+        // join matches its keys, GraftTable.query applies its regions.
+        val leafRegions = regions.filter(_.overlaps(leaf.region))
         val spec = RunSpec(paths, schema, outputNames, Some(leaf.region),
           store.aggregationConfig, store.filterConfig, System.currentTimeMillis(),
-          // pushed-filter regions reach the parquet row-group filter, so a
-          // point lookup touches ~one page per column even inside the leaf
-          queryRegions = if (regions.exists(_.ranges.forall(r => r.min.isEmpty && r.max.isEmpty)))
-            Nil else regions,
+          queryRegions =
+            if (leafRegions.exists(_.ranges.forall(r => r.min.isEmpty && r.max.isEmpty))) Nil
+            else Region.keyBatch(leafRegions).fold(leafRegions)(b => Seq(b._2)),
           limit = limit, limitLast = limitLast,
           tombstonePaths = tombPaths,
           pathSeqs = pathsWithSeq.map(_._2),
@@ -1292,6 +1296,28 @@ object RegionFromFilters {
       case _ => false
     }
   }
+
+  /** AND of two OR-of-region sets: the pairwise intersections that
+    * overlap, in canonical form over the row keys.
+    */
+  def intersect(schema: GraftSchema, as: Seq[Region], bs: Seq[Region]): Seq[Region] =
+    for {
+      a <- as
+      b <- bs
+      if a.overlaps(b)
+    } yield Region(schema.rowKeys.map { f =>
+      val ra = a.ranges.find(_.field == f.name).getOrElse(KeyRange.unbounded(f.name)).canonical
+      val rb = b.ranges.find(_.field == f.name).getOrElse(KeyRange.unbounded(f.name)).canonical
+      val min = (ra.min, rb.min) match {
+        case (Some(x), Some(y)) => Some(if (KeyOrdering.compare(x, y) >= 0) x else y)
+        case (x, y) => x.orElse(y)
+      }
+      val max = (ra.max, rb.max) match {
+        case (Some(x), Some(y)) => Some(if (KeyOrdering.compare(x, y) <= 0) x else y)
+        case (x, y) => x.orElse(y)
+      }
+      KeyRange(f.name, min, minInclusive = true, max, maxInclusive = false)
+    })
 
   /** Bounds intersection per column, then regions (IN multiplies regions,
     * capped by `supported`).

@@ -47,7 +47,7 @@ final case class TableConfig(
 final class GraftTable(
     val spark: SparkSession,
     val dir: String,
-    val store: StateStore,
+    val store: ConfiguredState,
     val config: TableConfig) {
 
   def schema: GraftSchema = store.schema
@@ -75,8 +75,44 @@ final class GraftTable(
   def ingest(input: DataFrame, txn: Option[(String, Long)] = None): Seq[FileReference] =
     new graft.jobs.Ingest(this).run(input, txn)
 
-  def query(q: graft.query.GraftQuery): DataFrame =
-    new graft.query.QueryExecutor(this).execute(q)
+  /** Run a query, mirroring the reference's planner + leaf executor
+    * (QueryPlanner.java / LeafPartitionQueryExecutor.java): the DSv2
+    * [[graft.sources.GraftScan]] over this handle's store, bounded by the
+    * query regions, prunes leaves and files and streams each leaf's
+    * merge — ancestor-file clip, delete markers, generation order, the
+    * persistent filter and aggregation ([[graft.exec.SortedRun]]).
+    * Above the scan, in order: the read-schema select (keys, requested
+    * values and the fields the transforms declare — pushed into the scan
+    * as column pruning), the exact region predicate (the scan may read
+    * whole row groups or a key batch's bounding box), the table
+    * transform, the query-config transform, the programmatic hook, the
+    * final projection (keys always kept) and the SQL post-stage.
+    */
+  def query(q: graft.query.GraftQuery): DataFrame = {
+    import org.apache.spark.sql.functions.col
+    import graft.transforms.TransformFactory
+    val regions = q.regions.map(_.canonical)
+    val scan = org.apache.spark.sql.graft.bridge.relationDataFrame(spark,
+      new graft.sources.GraftBatchTable(dir, loaded = Some(store), baseRegions = regions))
+    val tableTransform = TransformFactory.parse(store.transformConfig, schema, config.userJarsDir)
+    val queryTransform = q.queryTransformConfig.flatMap(
+      TransformFactory.parse(_, schema, config.userJarsDir))
+    def withValues(df: DataFrame, keep: String => Boolean): DataFrame =
+      df.select((schema.keyNames ++ schema.valueNames.filter(keep)).map(col): _*)
+    val read = q.requestedValueFields match {
+      case Some(req) =>
+        val need = req.toSet ++ (tableTransform ++ queryTransform).flatMap(_.requiredValueFields)
+        withValues(scan, need)
+      case None => scan
+    }
+    val inRegions = if (regions.isEmpty) read else read.filter(Region.anyOf(regions))
+    val hooks: Seq[DataFrame => DataFrame] =
+      (tableTransform ++ queryTransform).toSeq.map(t => t.apply _) ++ q.queryTimeTransform
+    val out = hooks.foldLeft(inRegions)((df, f) => f(df))
+    val projected = q.requestedValueFields.fold(out)(req => withValues(out, req.contains))
+    val sorted = projected.sortWithinPartitions(schema.keyNames.map(col): _*)
+    q.postSql.map(graft.query.SqlStage.overResults(spark, sorted, _)).getOrElse(sorted)
+  }
 
   /** Point lookup: rows whose row key equals the given values (schema
     * order) — the reference's headline ~0.5s use case (README.md:16-17);
@@ -267,21 +303,17 @@ final class GraftTable(
     * shape: the second identical query against an unchanged 100-TB
     * table costs a cache-dir read, zero planning and zero data IO.
     * Returns (result, servedFromCache). Snapshot (time-travel) loads
-    * cache under their historical version; stores without a version
-    * chain always recompute.
+    * cache under their historical version.
     */
   def queryCached(q: graft.query.GraftQuery, cacheDir: String)
       : (DataFrame, Boolean) = {
-    val version = store match {
-      // function transforms and the SQL post-stage are NOT part of the
-      // serialized query (the JSON interchange form cannot carry a
-      // closure, and postSql is graft-specific) — caching them would
-      // silently collide distinct queries under one key; bypass instead
-      case _ if q.queryTimeTransform.isDefined || q.postSql.isDefined => -1L
-      case j: JsonStateStore => j.currentVersion
-      case s: SnapshotStateStore => s.version
-      case _ => -1L
-    }
+    // function transforms and the SQL post-stage are NOT part of the
+    // serialized query (the JSON interchange form cannot carry a
+    // closure, and postSql is graft-specific) — caching them would
+    // silently collide distinct queries under one key; bypass instead
+    val version =
+      if (q.queryTimeTransform.isDefined || q.postSql.isDefined) -1L
+      else store.currentVersion
     val key = {
       val md = java.security.MessageDigest.getInstance("MD5")
       val json = graft.query.QuerySerDe.toJson(q, schema)

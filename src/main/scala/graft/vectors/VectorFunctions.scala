@@ -778,7 +778,7 @@ object VectorFunctions {
   def buildIvfIndexFromTable(table: graft.table.GraftTable, idCol: String,
       vecCol: String, indexDir: String, nCentroids: Int = 16,
       lloydIters: Int = 8, seed: Long = 42L): Unit = {
-    val v = tableVersion(table)
+    val v = table.store.currentVersion
     buildIvfIndex(table.toDF.select(col(idCol), col(vecCol)), idCol, vecCol,
       indexDir, nCentroids, lloydIters, seed)
     // keep the build's meta (nextSeq/tombstones/generation pointer) and
@@ -786,13 +786,6 @@ object VectorFunctions {
     writeIndexMeta(indexDir,
       readIndexMeta(indexDir).copy(lastSyncedVersion = v))
   }
-
-  private def tableVersion(table: graft.table.GraftTable): Long =
-    table.store match {
-      case c: graft.meta.ConfiguredState => c.currentVersion
-      case other => throw new IllegalArgumentException(
-        s"index sync needs a versioned state store, got ${other.getClass.getSimpleName}")
-    }
 
   /** Reconcile a persisted index with its base table's mutations since
     * the last sync — the DELETE/UPSERT consistency loop: reads the
@@ -810,7 +803,7 @@ object VectorFunctions {
   def syncIndexWithTable(table: graft.table.GraftTable, idCol: String,
       vecCol: String, indexDir: String, pq: Boolean = false): Long = {
     import org.apache.spark.sql.expressions.Window
-    val cur = tableVersion(table)
+    val cur = table.store.currentVersion
     val last = readIndexMeta(indexDir).lastSyncedVersion
     if (cur <= last) return last
     val ins = table.changesBetween(last, cur)

@@ -36,4 +36,16 @@ object bridge {
       schema: StructType): DataFrame =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .internalCreateDataFrame(rdd, schema)
+
+  /** A DataFrame over a DSv2 table instance the caller already holds
+    * (the private Dataset.ofRows), so a read can carry state that the
+    * path-based `spark.read.format(...).load(...)` would have to reload.
+    */
+  def relationDataFrame(spark: SparkSession,
+      table: org.apache.spark.sql.connector.catalog.Table): DataFrame =
+    org.apache.spark.sql.classic.Dataset.ofRows(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
+      org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation.create(
+        table, None, None,
+        org.apache.spark.sql.util.CaseInsensitiveStringMap.empty()))
 }

@@ -201,6 +201,36 @@ class GraftSourceSpec extends AnyFunSuite {
     assert(e.getMessage.contains("transform"), e.getMessage)
   }
 
+  test("GraftTable.query and lookup run on GraftScan, exact on the columnar path") {
+    val dir = tmp()
+    val table = GraftTable.create(spark, dir, schema)
+    val keys = (0 until 100).map(i => f"k$i%03d")
+    table.ingest(batch(keys.map(k => (k, 1L, 1L, Map.empty[String, Long])): _*))
+    table.ingest(batch(keys.map(k => (k, 2L, 2L, Map.empty[String, Long])): _*))
+    table.compactAll()
+
+    def graftScans(df: org.apache.spark.sql.DataFrame): Seq[BatchScanExec] =
+      df.queryExecution.executedPlan.collect {
+        case b: BatchScanExec if b.scan.isInstanceOf[GraftScan] => b
+      }
+
+    // one compacted leaf = one file = one row group: the columnar reader
+    // returns it whole, and the region predicate above the scan trims it
+    val range = table.query(graft.query.GraftQuery.forRegions(
+      Region(KeyRange.minMax("key", "k010", "k020"))))
+    assert(graftScans(range).map(_.supportsColumnar) == Seq(true))
+    assert(range.select("key").as[String].collect().toSeq.sorted ==
+      keys.slice(10, 20).flatMap(k => Seq(k, k)))
+
+    val lookup = table.lookup("k042")
+    val plan = lookup.queryExecution.executedPlan
+    assert(graftScans(lookup).size == 1, plan.toString)
+    assert(plan.collect {
+      case f: org.apache.spark.sql.execution.FileSourceScanExec => f
+    }.isEmpty, plan.toString)
+    assert(lookup.select("ts").as[Long].collect().toSeq.sorted == Seq(1L, 2L))
+  }
+
   test("vectorized fast path activates on a fully-compacted table and matches the row path") {
     val dir = tmp()
     val table = GraftTable.create(spark, dir, schema, splitPoints = Seq("m"))

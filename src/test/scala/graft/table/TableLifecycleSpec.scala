@@ -5,7 +5,7 @@ import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.core._
 import graft.jobs.{BasicCompactionStrategy, SizeRatioCompactionStrategy}
-import graft.query.{GraftQuery, QueryExecutor}
+import graft.query.GraftQuery
 
 /** End-to-end table lifecycle: ingest -> query -> compact -> split -> GC,
   * mirroring the reference's QueryExecutorTest / compaction_test.rs
@@ -138,7 +138,7 @@ class TableLifecycleSpec extends AnyFunSuite {
     assert(after == before)
   }
 
-  test("a pre-split ref elsewhere keeps untouched regions on the single-scan fast path") {
+  test("a pre-split ref is clipped to its leaf; other regions unaffected") {
     val table = GraftTable.create(spark, tmp(), schema, splitPoints = Seq("m"))
     table.ingest(batch(
       ("a", 1L, 1L, Map.empty[String, Long]), ("x", 1L, 2L, Map.empty[String, Long])))
@@ -148,16 +148,15 @@ class TableLifecycleSpec extends AnyFunSuite {
     val right = tree.leaves.find(_.region.ranges.head.min.contains("m")).get
     table.store.splitPartition(right.id, 0, "t", s"${right.id}-a", s"${right.id}-b")
 
-    // untouched left region: single-scan fast path, no leaf-id CASE WHEN
+    // untouched left region
     val qLeft = table.query(GraftQuery.forRegions(Region(Seq(KeyRange.minMax("key", "a", "c")))))
-    assert(!qLeft.queryExecution.optimizedPlan.toString.contains("CASE WHEN"),
-      "a pre-split ref in another branch must not force the clip path")
     assert(qLeft.select("key").as[String].collect().toSeq == Seq("a"))
 
-    // the split branch itself still takes the (correct) clip path
+    // the split branch reads the parent's file clipped to the selected leaf
     val qRight = table.query(GraftQuery.forRegions(Region(Seq(KeyRange.minMax("key", "u", "z")))))
-    assert(qRight.queryExecution.optimizedPlan.toString.contains("CASE WHEN"))
     assert(qRight.select("key").as[String].collect().toSeq == Seq("x"))
+    // both new leaves share that file; its row lands in exactly one
+    assert(table.toDF.select("key").as[String].collect().sorted.toSeq == Seq("a", "x"))
   }
 
   test("strategy-driven partition compaction matches whole-table compaction (order independence)") {
