@@ -137,6 +137,8 @@ object KeyOrdering {
   */
 final case class Region(ranges: Seq[KeyRange]) {
   def canonical: Region = Region(ranges.map(_.canonical))
+  /** No range bounds its field: the region is the whole key space. */
+  def unbounded: Boolean = ranges.forall(r => r.min.isEmpty && r.max.isEmpty)
   def toColumn: Column = ranges.map(_.toColumn).reduceOption(_ && _).getOrElse(lit(true))
   def overlaps(other: Region): Boolean = {
     val byField = other.ranges.map(r => r.field -> r).toMap

@@ -41,8 +41,8 @@ final case class RunSpec(
     /** table filter config ("" = none) */
     filterConfig: String,
     nowMs: Long,
-    /** query regions (ORed) — pushed into the parquet row-group filter
-      * and applied per row; empty = unconstrained */
+    /** query regions (ORed) — pushed into the parquet row-group and
+      * page filter and applied per row; empty = unconstrained */
     queryRegions: Seq[Region] = Nil,
     /** per-partition row cap (pushed LIMIT / key-order TopN): the stream
       * stops after this many output rows — valid for TopN because the
@@ -104,16 +104,19 @@ object SortedRun {
 
   /** The merged, clipped, filtered, aggregated row stream for a spec,
     * paired with a close() that releases every still-open file reader —
-    * needed when a consumer stops early (LIMIT / cancelled task).
+    * needed when a consumer stops early (LIMIT / cancelled task) — and
+    * the count of rows the data-file readers have decoded so far (before
+    * clip, regions, deletes, filter and aggregation).
     * `conf` is the Hadoop configuration resolving the file paths —
     * executor-side callers must pass the driver's (shipped via
     * [[graft.meta.SerializableHadoopConf]]); the default covers
     * driver-side use.
     */
   def open(spec: RunSpec, conf: Configuration = graft.meta.GraftFS.conf)
-      : (Iterator[InternalRow], () => Unit) = {
-    val (it, readers) = build(spec, conf)
-    (it, () => readers.foreach(r => try r.close() catch { case _: Exception => () }))
+      : (Iterator[InternalRow], () => Unit, () => Long) = {
+    val (it, readers, tombReaders) = build(spec, conf)
+    (it, () => (readers ++ tombReaders).foreach(r => try r.close() catch { case _: Exception => () }),
+      () => readers.iterator.map(_.rowsDecoded).sum)
   }
 
   /** The merged, clipped, filtered, aggregated row stream for a spec.
@@ -124,7 +127,7 @@ object SortedRun {
       : Iterator[InternalRow] = build(spec, conf)._1
 
   private def build(spec: RunSpec, conf: Configuration)
-      : (Iterator[InternalRow], Seq[RowSource]) = {
+      : (Iterator[InternalRow], Seq[RowSource], Seq[RowSource]) = {
     val schema = spec.schema
     val keyFields = schema.keyFields
     val filterSpec = ConfigDsl.parseFilter(spec.filterConfig, schema)
@@ -146,10 +149,10 @@ object SortedRun {
       case (a, b) => a.orElse(b)
     }
     // Atomic-typed schemas decode through the vectorized reader (the
-    // pushed predicate prunes at row-group-stats granularity there; the
-    // explicit row-level bound tests below carry the exact semantics
-    // either way). Nested types (map_sum tables etc.) keep the
-    // record-materializing Group reader.
+    // pushed predicate prunes row groups and pages there; the explicit
+    // row-level bound tests below carry the exact semantics either way).
+    // Nested types (map_sum tables etc.) keep the record-materializing
+    // Group reader.
     val vectorizable = readFields.forall(f => f.dataType match {
       case _: ArrayType | _: MapType | _: StructType => false
       case _ => true
@@ -206,15 +209,10 @@ object SortedRun {
     }
     val merged = mergeSorted(readers, keyFields)
 
-    val leafTests = spec.clip.toSeq.flatMap(_.ranges.flatMap(boundTest(_, readFields, readIndex)))
-    val regionTests = spec.queryRegions.map(r =>
-      r.ranges.toArray.flatMap(boundTest(_, readFields, readIndex)))
+    val rowTests = (spec.clip.flatMap(c => regionTest(Seq(c), readFields)) ++
+      regionTest(spec.queryRegions, readFields)).toArray
     val clipped =
-      if (leafTests.isEmpty && regionTests.isEmpty) merged
-      else merged.filter { row =>
-        leafTests.forall(_(row)) &&
-          (regionTests.isEmpty || regionTests.exists(_.forall(_(row))))
-      }
+      if (rowTests.isEmpty) merged else merged.filter(row => rowTests.forall(_(row)))
 
     val filtered = filterSpec match {
       case Some(ConfigDsl.AgeOff(field, maxAgeMs)) =>
@@ -267,7 +265,7 @@ object SortedRun {
         }
       }
     }.getOrElse(projected)
-    (limited, readers ++ tombReaders.toSeq)
+    (limited, readers, tombReaders.toSeq)
   }
 
   /** A data reader with its applicable delete markers anti-joined in:
@@ -287,6 +285,7 @@ object SortedRun {
       source.close()
       tombSources.foreach(t => try t.close() catch { case _: Exception => () })
     }
+    override def rowsDecoded: Long = source.rowsDecoded
   }
 
   /** Streaming merge-anti-join on the ROW-KEY prefix: `rows` ascending
@@ -436,6 +435,23 @@ object SortedRun {
       }
     }
     preds.reduceOption(FilterApi.and)
+  }
+
+  /** ORed regions as one row test over rows laid out as `fields`
+    * (internal values, canonical bounds): the exact membership that the
+    * pushed parquet predicate only narrows to row groups and pages.
+    * None when there are no regions, or when a region bounds a field the
+    * rows do not carry. Shared by the row merge and the DSv2 columnar
+    * reader.
+    */
+  private[graft] def regionTest(regions: Seq[Region], fields: Seq[GraftField])
+      : Option[InternalRow => Boolean] = {
+    val index = fields.map(_.name).zipWithIndex.toMap
+    if (regions.isEmpty || !regions.forall(_.ranges.forall(r => index.contains(r.field)))) None
+    else {
+      val tests = regions.map(_.ranges.toArray.flatMap(boundTest(_, fields, index))).toArray
+      Some(row => tests.exists(_.forall(_(row))))
+    }
   }
 
   /** Per-range row predicate over internal values (canonical bounds). */
@@ -823,7 +839,10 @@ private[graft] object SortedRunAccess {
   * StructTypeFactory.java:54-73).
   */
 /** Per-file sorted row source feeding the N-way merge. */
-private[graft] sealed trait RowSource extends Iterator[InternalRow] with AutoCloseable
+private[graft] sealed trait RowSource extends Iterator[InternalRow] with AutoCloseable {
+  /** Rows decoded from the file so far. */
+  def rowsDecoded: Long
+}
 
 /** Spark's vectorized parquet decoder consumed row-wise: batches decode
   * columnar (dictionary/RLE-aware, ~2× the example-Group assembly path),
@@ -843,6 +862,7 @@ private[graft] final class VectorizedRowIterator(path: String, fields: Seq[Graft
       filter, capacity = 4096, conf, fileRange)
   private var batchRows: java.util.Iterator[InternalRow] = java.util.Collections.emptyIterator()
   private var done = false
+  private var decoded = 0L
 
   private def advance(): Unit = {
     while (!done && !batchRows.hasNext) {
@@ -855,6 +875,7 @@ private[graft] final class VectorizedRowIterator(path: String, fields: Seq[Graft
           case Some(p) => new org.apache.spark.sql.vectorized.ColumnarBatch(
             p.map(i => raw.column(i)), raw.numRows())
         }
+        decoded += b.numRows
         batchRows = b.rowIterator()
       } else { done = true; close() }
     }
@@ -865,6 +886,8 @@ private[graft] final class VectorizedRowIterator(path: String, fields: Seq[Graft
   override def next(): InternalRow = { advance(); batchRows.next().copy() }
 
   override def close(): Unit = reader.close()
+
+  override def rowsDecoded: Long = decoded
 }
 
 private[graft] final class GroupRowIterator(path: String, fields: Seq[GraftField],
@@ -883,17 +906,20 @@ private[graft] final class GroupRowIterator(path: String, fields: Seq[GraftField
   }
 
   private var nextRow: InternalRow = reader.read()
+  private var decoded = if (nextRow == null) 0L else 1L
 
   override def hasNext: Boolean = nextRow != null
 
   override def next(): InternalRow = {
     val r = nextRow
     nextRow = reader.read()
-    if (nextRow == null) close()
+    if (nextRow == null) close() else decoded += 1
     r
   }
 
   override def close(): Unit = reader.close()
+
+  override def rowsDecoded: Long = decoded
 }
 
 /** One Spark task per sorted-run merge: partition i streams specs(i).
@@ -915,7 +941,7 @@ final class MergeRDD(
 
   override def compute(split: org.apache.spark.Partition,
       context: org.apache.spark.TaskContext): Iterator[InternalRow] = {
-    val (it, close) = SortedRun.open(split.asInstanceOf[MergeTaskPartition].spec, confW.value)
+    val (it, close, _) = SortedRun.open(split.asInstanceOf[MergeTaskPartition].spec, confW.value)
     context.addTaskCompletionListener[Unit](_ => close())
     it
   }
@@ -994,7 +1020,7 @@ final class SketchingMergeRDD(
       graft.meta.BloomIndex.MaxExpectedItems))
     val blFilters = blNames.map(_ => org.apache.spark.util.sketch.BloomFilter
       .create(blExpected, graft.meta.BloomIndex.Fpp))
-    val (inner, close) = SortedRun.open(spec, confW.value)
+    val (inner, close, _) = SortedRun.open(spec, confW.value)
     context.addTaskCompletionListener[Unit](_ => close())
     var written = false
 

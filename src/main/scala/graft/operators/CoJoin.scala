@@ -158,7 +158,7 @@ private[operators] final class CoJoinRDD(
     def open(spec: RunSpec): Iterator[InternalRow] =
       if (spec.paths.isEmpty) Iterator.empty
       else {
-        val (it, close) = SortedRun.open(spec, confW.value)
+        val (it, close, _) = SortedRun.open(spec, confW.value)
         context.addTaskCompletionListener[Unit](_ => close())
         it
       }

@@ -462,6 +462,7 @@ final class GraftScanBuilder(dir: String, store: graft.meta.ConfiguredState,
   private val schema = store.schema
   private var pushed: Array[Filter] = Array.empty
   private val base: Seq[Region] = if (baseRegions.isEmpty) Seq(allKeySpace) else baseRegions
+  private val baseRestricts = !base.exists(_.unbounded)
   private var regions: Seq[Region] = base
   private var required: StructType = schema.toStructType
   private var pushedLimit: Option[Int] = None
@@ -541,10 +542,13 @@ final class GraftScanBuilder(dir: String, store: graft.meta.ConfiguredState,
     * a shared file would double-count; both disqualify) and no
     * persistent filter/aggregation changes the merged view. A 100-TB
     * `SELECT COUNT(*), MIN(k), MAX(k)` then reads zero data files —
-    * only sidecars, bounded at 4096 driver-side reads. (Spark only
-    * attempts aggregate pushdown when every filter was fully pushed;
-    * this source keeps all filters residual, so a filtered aggregate
-    * never reaches here — the guard is belt-and-braces.)
+    * only sidecars, bounded at 4096 driver-side reads. Spark attempts
+    * aggregate pushdown only when every filter was fully pushed, and
+    * this source keeps all filters residual, so a filtered DataFrame
+    * aggregate never reaches here. A `GraftTable.query` scan does: its
+    * regions bound the builder and no filter sits above the scan, so
+    * `lookup(k).count()` arrives here and must decline, because the
+    * metadata describes the whole table.
     */
   private def aggFromMetadata(
       agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation)
@@ -553,7 +557,7 @@ final class GraftScanBuilder(dir: String, store: graft.meta.ConfiguredState,
     import org.apache.spark.sql.connector.expressions.aggregate.{CountStar, Max, Min, Sum}
     import org.apache.spark.sql.types.{IntegerType, LongType}
     if (agg.groupByExpressions.nonEmpty || agg.aggregateExpressions.isEmpty) return None
-    if (pushed.nonEmpty) return None
+    if (pushed.nonEmpty || baseRestricts) return None
     if (store.aggregationConfig.trim.nonEmpty || store.filterConfig.trim.nonEmpty) return None
     // pending row-key deletes: footer counts and sidecar stats still
     // include the tombstoned rows — metadata answers would overcount
@@ -711,7 +715,12 @@ final class GraftScanBuilder(dir: String, store: graft.meta.ConfiguredState,
     case Some(values) => new GraftMetaAggScan(dir, values)
     case None =>
       new GraftScan(dir, store, regions, required, pushedLimit, statsPreds, pushedLimitLast,
-        bloomPreds, pushedMixedDirs, maxVersionsPerTrigger)
+        bloomPreds, pushedMixedDirs, maxVersionsPerTrigger,
+        // a key batch's bounding box is safe to read only where its exact
+        // membership is re-checked above the scan: by Spark for pushed and
+        // runtime filters over the whole key space, by GraftTable.query
+        // for a key batch of base regions
+        readKeyBatchBox = !baseRestricts || Region.keyBatch(base).isDefined)
   }
 }
 
@@ -749,7 +758,8 @@ final class GraftScan(dir: String, store: graft.meta.ConfiguredState,
     statsPreds: Seq[StatsPred] = Nil, limitLast: Boolean = false,
     bloomPreds: Seq[(String, Seq[Long])] = Nil,
     mixedDirs: Seq[Boolean] = Nil,
-    maxVersionsPerTrigger: Option[Long] = None)
+    maxVersionsPerTrigger: Option[Long] = None,
+    readKeyBatchBox: Boolean = true)
   extends Scan with Batch with SupportsReportOrdering with SupportsRuntimeFiltering
     with SupportsReportStatistics
     with org.apache.spark.sql.connector.read.SupportsReportPartitioning {
@@ -803,6 +813,10 @@ final class GraftScan(dir: String, store: graft.meta.ConfiguredState,
   override def readSchema(): StructType = required
 
   override def toBatch: Batch = this
+
+  override def supportedCustomMetrics()
+      : Array[org.apache.spark.sql.connector.metric.CustomMetric] =
+    Array(new GraftRowsDecodedMetric, new GraftRowsEmittedMetric)
 
   /** `spark.readStream.format("graft")` — the table-changes micro-batch
     * source (see [[GraftMicroBatchStream]]). Column pruning applies (the
@@ -1003,17 +1017,19 @@ final class GraftScan(dir: String, store: graft.meta.ConfiguredState,
       if (paths.isEmpty) None
       else {
         // the query regions reaching this leaf go to the parquet row-group
-        // filter, so a point lookup touches ~one page per column even
-        // inside the leaf; a key batch reads its bounding box instead of a
-        // per-row test over every key. Exact membership is decided above
-        // the scan: Spark re-applies pushed filters, a runtime filter's
-        // join matches its keys, GraftTable.query applies its regions.
+        // and page filter, so a point lookup decodes ~one page per column
+        // even inside the leaf, and every read path emits exactly the rows
+        // inside them. A key batch may read its bounding box instead of a
+        // per-row test over every key (see readKeyBatchBox); its exact
+        // membership is then checked above the scan.
         val leafRegions = regions.filter(_.overlaps(leaf.region))
+        val queryRegions =
+          if (leafRegions.exists(_.unbounded)) Nil
+          else if (readKeyBatchBox) Region.keyBatch(leafRegions).fold(leafRegions)(b => Seq(b._2))
+          else leafRegions
         val spec = RunSpec(paths, schema, outputNames, Some(leaf.region),
           store.aggregationConfig, store.filterConfig, System.currentTimeMillis(),
-          queryRegions =
-            if (leafRegions.exists(_.ranges.forall(r => r.min.isEmpty && r.max.isEmpty))) Nil
-            else Region.keyBatch(leafRegions).fold(leafRegions)(b => Seq(b._2)),
+          queryRegions = queryRegions,
           limit = limit, limitLast = limitLast,
           tombstonePaths = tombPaths,
           pathSeqs = pathsWithSeq.map(_._2),
@@ -1025,13 +1041,14 @@ final class GraftScan(dir: String, store: graft.meta.ConfiguredState,
           clipNoop = refs.forall(_.physicalPartitionId == leaf.id))
         // a DESC TopN needs the merge reader's last-n ring buffer; the
         // native batch reader can only truncate from the FRONT. Pending
-        // tombstones are fine — the columnar reader applies the sorted
-        // marker anti-join batch-wise (pass-through when a batch's key
-        // range holds no marker) — but only when the projection carries
-        // every row key; otherwise the row merge reader (which reads
-        // keys internally) takes over.
+        // tombstones and query regions are fine — the columnar reader
+        // trims each batch to the regions and applies the sorted marker
+        // anti-join in one pass — but only when the projection carries
+        // the columns they test; otherwise the row merge reader (which
+        // reads keys internally) takes over.
         val singleLocal = !limitLast && mixedDirs.isEmpty &&
           (tombPaths.isEmpty || schema.rowKeyNames.forall(outputNames.contains)) &&
+          queryRegions.forall(_.ranges.forall(r => outputNames.contains(r.field))) &&
           refs.size == 1 && refs.head.partitionId == leaf.id &&
           refs.head.physicalPartitionId == leaf.id && refs.head.rowCount <= Int.MaxValue
         Some(LeafScan(spec, singleLocal, leaf.id))
@@ -1052,10 +1069,9 @@ final class GraftScan(dir: String, store: graft.meta.ConfiguredState,
     * leaves ride along as row merges wrapped into ColumnarBatches — a
     * small copy cost, paid only while a leaf awaits compaction. A scan
     * with NO native-capable leaf stays on the plain row path (wrapping
-    * everything would be pure overhead). Pushed/runtime filters stay
-    * correct either way: all filters are re-applied by Spark post-scan
-    * (pushFilters returns every filter as residual); the row-group
-    * predicate still prunes IO.
+    * everything would be pure overhead). Both paths emit exactly the rows
+    * inside each leaf's query regions; Spark still re-applies every
+    * pushed filter post-scan (pushFilters returns them all as residual).
     */
   private def scanColumnar(parts: Array[LeafScan]): Boolean =
     parts.exists(_.singleLocalFile) &&
@@ -1115,13 +1131,17 @@ final class GraftReaderFactory(confW: graft.meta.SerializableHadoopConf)
     partition.asInstanceOf[GraftInputPartition].columnar
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val (it, closeAll) =
+    val (it, closeAll, decoded) =
       SortedRun.open(partition.asInstanceOf[GraftInputPartition].spec, confW.value)
     new PartitionReader[InternalRow] {
       private var current: InternalRow = _
+      private var emitted = 0L
       override def next(): Boolean =
-        if (it.hasNext) { current = it.next(); true } else false
+        if (it.hasNext) { current = it.next(); emitted += 1; true } else false
       override def get(): InternalRow = current
+      override def currentMetricsValues()
+          : Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
+        GraftScanMetrics.values(decoded(), emitted)
       // releases file readers left open by an early stop (LIMIT etc.)
       override def close(): Unit = closeAll()
     }
@@ -1141,10 +1161,11 @@ final class GraftReaderFactory(confW: graft.meta.SerializableHadoopConf)
   private def nativeColumnarReader(spec: RunSpec)
       : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
     import org.apache.spark.sql.vectorized.ColumnarBatch
-    val pred = SortedRun.queryPredicate(spec.queryRegions, spec.schema.keyFields)
+    val outFields = spec.output.map(spec.schema.field)
+    // over the projected columns only, as the bridge requires
+    val pred = SortedRun.queryPredicate(spec.queryRegions, outFields)
     val (vec, perm) = org.apache.spark.sql.execution.datasources.parquet.GraftVectorizedBridge
-      .open(spec.paths.head,
-        StructType(spec.output.map(n => spec.schema.field(n).toStructField)),
+      .open(spec.paths.head, StructType(outFields.map(_.toStructField)),
         pred, capacity = 4096, conf = confW.value)
     val fileSeq =
       if (spec.pathSeqs.size == spec.paths.size) spec.pathSeqs.head else 0L
@@ -1152,15 +1173,24 @@ final class GraftReaderFactory(confW: graft.meta.SerializableHadoopConf)
     new PartitionReader[ColumnarBatch] {
       // honor the pushed per-partition LIMIT/TopN cap here too — without
       // it, exactly the advertised steady state (compacted leaves) would
-      // read whole files; the last batch is truncated via setNumRows
+      // read whole files; it counts emitted rows, and the last batch is
+      // truncated via setNumRows
       private var remaining: Long = spec.limit.map(_.toLong).getOrElse(Long.MaxValue)
+      private var decoded = 0L
+      private var emitted = 0L
+      private var current: ColumnarBatch = _
+
+      // The kept pages also hold the neighbours of the rows in the query
+      // regions: the exact membership test. Null when unconstrained (or
+      // when a region field is not projected; the planner then picks the
+      // row merge instead).
+      private val inRegions = SortedRun.regionTest(spec.queryRegions, outFields).orNull
 
       // ---- sorted-marker anti-join state (pending deleteKeys) ----
       // Rows in every batch and the merged marker stream are both key-
       // ascending, so the join is a cursor walk: a batch whose key range
-      // holds no marker passes through UNTOUCHED (zero copy — the
-      // common case: markers are a takedown-sized set), and only
-      // marker-overlapping batches repack their surviving rows.
+      // holds no marker needs no marker test (the common case: markers
+      // are a takedown-sized set).
       private val tombs = tombOpt.map(_._1).orNull
       private val keyOrds = spec.schema.rowKeys
         .map(f => spec.output.indexOf(f.name)).toArray
@@ -1178,6 +1208,12 @@ final class GraftReaderFactory(confW: graft.meta.SerializableHadoopConf)
         }
         0
       }
+      /** Whether a marker deletes `r`; rows must come key-ascending. */
+      private def deleted(r: org.apache.spark.sql.catalyst.InternalRow): Boolean = {
+        while (curTomb != null && cmpRowTomb(r, curTomb) > 0)
+          curTomb = if (tombs.hasNext) tombs.next() else null
+        curTomb != null && cmpRowTomb(r, curTomb) == 0
+      }
       private lazy val packSchema = StructType(spec.output.map { n =>
         val f = spec.schema.field(n)
         org.apache.spark.sql.types.StructField(f.name, f.dataType, nullable = true)
@@ -1187,54 +1223,70 @@ final class GraftReaderFactory(confW: graft.meta.SerializableHadoopConf)
         .OnHeapColumnVector.allocateColumns(4096, packSchema)
       private lazy val packBatch = new ColumnarBatch(
         packVectors.map(v => v: org.apache.spark.sql.vectorized.ColumnVector), 0)
+      private lazy val survivors = new Array[Int](4096)
 
-      private def antiJoin(b: ColumnarBatch): ColumnarBatch = {
-        if (curTomb == null || b.numRows == 0) return b
-        // markers entirely below this batch can never match again
-        val first = b.getRow(0)
-        while (curTomb != null && cmpRowTomb(first, curTomb) > 0)
-          curTomb = if (tombs.hasNext) tombs.next() else null
-        if (curTomb == null || cmpRowTomb(b.getRow(b.numRows - 1), curTomb) < 0)
-          return b // whole batch below the next marker: pass through
-        packVectors.foreach(_.reset())
-        var n = 0
-        val it = b.rowIterator()
-        while (it.hasNext) {
-          val r = it.next()
-          var dropped = false
-          var decided = false
-          while (!decided) {
-            if (curTomb == null) decided = true
-            else {
-              val c = cmpRowTomb(r, curTomb)
-              if (c > 0) curTomb = if (tombs.hasNext) tombs.next() else null
-              else { dropped = c == 0; decided = true }
-            }
+      /** The rows of `b` inside the query regions and not deleted, found
+        * in one pass: `b` itself when every row survives, else the
+        * survivors packed into the pack batch.
+        */
+      private def trim(b: ColumnarBatch): ColumnarBatch = {
+        val n = b.numRows
+        if (n == 0) return b
+        // markers below this batch can never match again; a batch wholly
+        // below the next marker needs no marker test
+        deleted(b.getRow(0))
+        val testTombs = curTomb != null && cmpRowTomb(b.getRow(n - 1), curTomb) >= 0
+        if (inRegions == null && !testTombs) return b
+        var kept = 0
+        var i = 0
+        while (i < n) {
+          val r = b.getRow(i)
+          if ((inRegions == null || inRegions(r)) && !(testTombs && deleted(r))) {
+            survivors(kept) = i
+            kept += 1
           }
-          if (!dropped) {
-            packer.pack(r, packVectors.asInstanceOf[Array[
-              org.apache.spark.sql.execution.vectorized.WritableColumnVector]])
-            n += 1
-          }
+          i += 1
         }
-        packBatch.setNumRows(n)
+        if (kept == n) return b
+        packVectors.foreach(_.reset())
+        val out = packVectors.asInstanceOf[Array[
+          org.apache.spark.sql.execution.vectorized.WritableColumnVector]]
+        var j = 0
+        while (j < kept) {
+          packer.pack(b.getRow(survivors(j)), out)
+          j += 1
+        }
+        packBatch.setNumRows(kept)
         packBatch
       }
 
-      override def next(): Boolean = remaining > 0 && vec.nextKeyValue()
-      override def get(): ColumnarBatch = {
-        val raw = vec.getCurrentValue.asInstanceOf[ColumnarBatch]
-        // restore the requested column order when evolved columns were
-        // appended by the reader's partition-column seam
-        val ordered = perm match {
-          case None => raw
-          case Some(p) => new ColumnarBatch(p.map(i => raw.column(i)), raw.numRows())
+      // batches with no surviving row are skipped here, so every batch
+      // handed to Spark holds rows
+      override def next(): Boolean = {
+        current = null
+        while (current == null && remaining > 0 && vec.nextKeyValue()) {
+          val raw = vec.getCurrentValue.asInstanceOf[ColumnarBatch]
+          decoded += raw.numRows
+          // restore the requested column order when evolved columns were
+          // appended by the reader's partition-column seam
+          val ordered = perm match {
+            case None => raw
+            case Some(p) => new ColumnarBatch(p.map(i => raw.column(i)), raw.numRows())
+          }
+          val b = trim(ordered)
+          if (b.numRows > 0) {
+            if (b.numRows > remaining) b.setNumRows(remaining.toInt)
+            remaining -= b.numRows
+            emitted += b.numRows
+            current = b
+          }
         }
-        val b = antiJoin(ordered)
-        if (b.numRows > remaining) b.setNumRows(remaining.toInt)
-        remaining -= b.numRows
-        b
+        current != null
       }
+      override def get(): ColumnarBatch = current
+      override def currentMetricsValues()
+          : Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
+        GraftScanMetrics.values(decoded, emitted)
       override def close(): Unit = {
         vec.close()
         tombOpt.foreach(_._2())
@@ -1256,8 +1308,9 @@ final class GraftReaderFactory(confW: graft.meta.SerializableHadoopConf)
     val converter = new org.apache.spark.sql.execution.GraftRowPacker(structType)
     val vectors = OnHeapColumnVector.allocateColumns(capacity, structType)
     val batch = new ColumnarBatch(vectors.map(v => v: ColumnVector), 0)
-    val (it, closeAll) = SortedRun.open(spec, confW.value)
+    val (it, closeAll, decoded) = SortedRun.open(spec, confW.value)
     new PartitionReader[ColumnarBatch] {
+      private var emitted = 0L
       override def next(): Boolean = {
         if (!it.hasNext) return false
         vectors.foreach(_.reset())
@@ -1268,12 +1321,50 @@ final class GraftReaderFactory(confW: graft.meta.SerializableHadoopConf)
           n += 1
         }
         batch.setNumRows(n)
+        emitted += n
         true
       }
       override def get(): ColumnarBatch = batch
+      override def currentMetricsValues()
+          : Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
+        GraftScanMetrics.values(decoded(), emitted)
       override def close(): Unit = { closeAll(); batch.close() }
     }
   }
+}
+
+/** [[GraftScan]]'s DSv2 custom metrics, summed over tasks: rows the
+  * parquet readers decoded and rows the scan emitted. Their ratio is the
+  * scan's read amplification, which page skipping keeps near one for a
+  * point lookup. Spark instantiates the metric classes by name on the
+  * driver, hence public classes with no-arg constructors.
+  */
+object GraftScanMetrics {
+  val RowsDecoded = "rowsDecoded"
+  val RowsEmitted = "rowsEmitted"
+
+  def values(decoded: Long, emitted: Long)
+      : Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
+    Array(task(RowsDecoded, decoded), task(RowsEmitted, emitted))
+
+  private def task(metric: String, v: Long)
+      : org.apache.spark.sql.connector.metric.CustomTaskMetric =
+    new org.apache.spark.sql.connector.metric.CustomTaskMetric {
+      override def name(): String = metric
+      override def value(): Long = v
+    }
+}
+
+final class GraftRowsDecodedMetric
+    extends org.apache.spark.sql.connector.metric.CustomSumMetric {
+  override def name(): String = GraftScanMetrics.RowsDecoded
+  override def description(): String = "rows decoded by the parquet reader"
+}
+
+final class GraftRowsEmittedMetric
+    extends org.apache.spark.sql.connector.metric.CustomSumMetric {
+  override def name(): String = GraftScanMetrics.RowsEmitted
+  override def description(): String = "rows emitted by the scan"
 }
 
 /** Pushed-filter → region translation: intersect per-row-key-column

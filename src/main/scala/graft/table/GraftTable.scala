@@ -81,12 +81,15 @@ final class GraftTable(
     * query regions, prunes leaves and files and streams each leaf's
     * merge — ancestor-file clip, delete markers, generation order, the
     * persistent filter and aggregation ([[graft.exec.SortedRun]]).
+    * The scan returns exactly the rows in the query regions, except for
+    * a key batch ([[Region.keyBatch]]), whose bounding box it reads.
     * Above the scan, in order: the read-schema select (keys, requested
     * values and the fields the transforms declare — pushed into the scan
-    * as column pruning), the exact region predicate (the scan may read
-    * whole row groups or a key batch's bounding box), the table
+    * as column pruning), a key batch's membership predicate, the table
     * transform, the query-config transform, the programmatic hook, the
-    * final projection (keys always kept) and the SQL post-stage.
+    * final projection (keys always kept) and the SQL post-stage. No key
+    * literal enters the plan otherwise, so lookups of different keys
+    * share one generated class.
     */
   def query(q: graft.query.GraftQuery): DataFrame = {
     import org.apache.spark.sql.functions.col
@@ -105,7 +108,8 @@ final class GraftTable(
         withValues(scan, need)
       case None => scan
     }
-    val inRegions = if (regions.isEmpty) read else read.filter(Region.anyOf(regions))
+    val inRegions =
+      if (Region.keyBatch(regions).isEmpty) read else read.filter(Region.anyOf(regions))
     val hooks: Seq[DataFrame => DataFrame] =
       (tableTransform ++ queryTransform).toSeq.map(t => t.apply _) ++ q.queryTimeTransform
     val out = hooks.foldLeft(inRegions)((df, f) => f(df))

@@ -64,7 +64,9 @@ object GraftVectorizedBridge {
       new InvocationHandler {
         override def invoke(proxy: AnyRef, method: Method, args: Array[AnyRef]): AnyRef =
           method.getName match {
-            case "readNextRowGroup" => fileReader.readNextRowGroup()
+            // only the pages the column-index filter keeps, as Spark's own
+            // ParquetRowGroupReaderImpl reads them
+            case "readNextRowGroup" => fileReader.readNextFilteredRowGroup()
             case "close" => fileReader.close(); null
             case "hashCode" => Int.box(System.identityHashCode(proxy))
             case "equals" => Boolean.box(args != null && (proxy eq args(0)))
@@ -73,12 +75,16 @@ object GraftVectorizedBridge {
           }
       })
 
-  /** An initialized vectorized reader over one whole parquet file,
-    * projected to `columns`, with optional row-group statistics
-    * filtering (stats granularity only — page-level column-index
-    * filtering is disabled because the batch reader's row accounting
-    * assumes whole row groups). The caller loops `nextKeyValue()` /
-    * `getCurrentValue` (a ColumnarBatch) and must `close()`.
+  /** An initialized vectorized reader over one parquet file, projected
+    * to `columns`. An optional predicate skips whole row groups by their
+    * statistics and, inside the row groups kept, every page whose
+    * column-index min/max rules it out: a point lookup decodes about one
+    * page per column. The rows returned are those of the kept pages, a
+    * superset of the matching rows; callers needing exact rows test
+    * them. The predicate may name only columns in `columns`: the page
+    * filter reads any other column as all-null and would keep none of
+    * its pages. The caller loops `nextKeyValue()` / `getCurrentValue` (a
+    * ColumnarBatch) and must `close()`.
     *
     * Schema evolution: columns absent from the file (appended by
     * AddColumn after it was written; necessarily nullable) ride as
@@ -95,7 +101,7 @@ object GraftVectorizedBridge {
     val optsB = HadoopReadOptions.builder(conf, hPath)
     rowGroupFilter.foreach(p => optsB.withRecordFilter(FilterCompat.get(p)))
     fileRange.foreach { case (s, e) => optsB.withRange(s, e) }
-    optsB.useColumnIndexFilter(false)
+    optsB.useColumnIndexFilter(true)
     val fileReader = ParquetFileReader.open(HadoopInputFile.fromPath(hPath, conf), optsB.build())
     try {
       val fileSchema = fileReader.getFooter.getFileMetaData.getSchema
@@ -121,7 +127,7 @@ object GraftVectorizedBridge {
         present.map(f => fileSchema.getFields.get(
           fileSchema.getFieldIndex(resolvedNames(f).get))): _*)
       fileReader.setRequestedSchema(requested)
-      val rows = fileReader.getRecordCount // sums only blocks surviving the filter
+      val rows = fileReader.getFilteredRecordCount // rows of the pages kept
       require(rows <= Int.MaxValue, s"file too large for one vectorized task: $rows rows")
       val vec = new VectorizedParquetRecordReader(false, capacity)
       initializeMethod.invoke(vec, fileSchema, requested,

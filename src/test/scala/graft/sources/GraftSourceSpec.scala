@@ -214,8 +214,8 @@ class GraftSourceSpec extends AnyFunSuite {
         case b: BatchScanExec if b.scan.isInstanceOf[GraftScan] => b
       }
 
-    // one compacted leaf = one file = one row group: the columnar reader
-    // returns it whole, and the region predicate above the scan trims it
+    // one compacted leaf = one file: the columnar reader decodes the pages
+    // the region can touch and trims them to exactly the region's rows
     val range = table.query(graft.query.GraftQuery.forRegions(
       Region(KeyRange.minMax("key", "k010", "k020"))))
     assert(graftScans(range).map(_.supportsColumnar) == Seq(true))
