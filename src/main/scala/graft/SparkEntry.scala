@@ -16,17 +16,14 @@ object SparkEntry {
     allDefs("j1_join_agg").build(spark, "/root/testdata/sf0.001")
 
   /** One entry per implemented operator from SURVEY.md §2. Each build
-    * runs on a query-scoped session whose shuffle parallelism is
-    * derived from the dataset's input bytes (BatchTuning) — the batch
-    * counterpart of the streaming drains' statePartitionsFor; the
-    * caller's session keeps its own conf untouched and stays the cap.
+    * runs on the session it is given: reduce stages start at the
+    * caller's `spark.sql.shuffle.partitions` and Spark's adaptive
+    * execution coalesces them from the map output it observes. Builds
+    * that register catalogs, temp views or table confs do so on that
+    * session.
     */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    allDefs.map { case (name, d) =>
-      name -> { (s: SparkSession, dir: String) =>
-        d.build(BatchTuning.scaledSession(s, dir), dir)
-      }
-    }
+    allDefs.map { case (name, d) => name -> d.build }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for non-SQL-expressible ops.
