@@ -3,10 +3,9 @@ package graft.exec
 import java.util.PriorityQueue
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
+import org.apache.parquet.hadoop.ParquetReader
 import org.apache.parquet.hadoop.example.GroupReadSupport
 import org.apache.parquet.hadoop.api.ReadSupport
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.schema.MessageType
 import org.apache.spark.sql.catalyst.InternalRow
@@ -394,12 +393,7 @@ object SortedRun {
         fromGroups(graft.meta.SketchSidecar.decodeRowGroups(bytes))
       case None =>
         footerFallbackReads.incrementAndGet()
-        val r = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(path), conf))
-        try {
-          import scala.jdk.CollectionConverters._
-          fromGroups(r.getFooter.getBlocks.asScala.toSeq
-            .map(b => (b.getStartingPos, b.getRowCount)))
-        } finally r.close()
+        fromGroups(ParquetOpen.rowGroups(new Path(path), conf))
     }
   }
 
@@ -897,8 +891,13 @@ private[graft] final class GroupRowIterator(path: String, fields: Seq[GraftField
   extends RowSource {
 
   private val reader: ParquetReader[InternalRow] = {
-    val b = ParquetReader.builder(new RowReadSupport(fields), new Path(path))
-      .withConf(conf)
+    // the InputFile builder reads on the file's conf; the Path builder
+    // would build (and parse the XML of) a fresh Configuration per open
+    val rowSupport = new RowReadSupport(fields)
+    val b = new ParquetReader.Builder[InternalRow](
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(new Path(path), conf)) {
+      override protected def getReadSupport(): ReadSupport[InternalRow] = rowSupport
+    }
     filter.foreach(f =>
       b.withFilter(org.apache.parquet.filter2.compat.FilterCompat.get(f)))
     fileRange.foreach { case (s, e) => b.withFileRange(s, e) }

@@ -627,10 +627,6 @@ final class Compaction(table: GraftTable,
     }
   }
 
-  private def footerRowCount(path: String): Long = {
-    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-      new Path(path), spark.sparkContext.hadoopConfiguration)
-    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-    try reader.getRecordCount finally reader.close()
-  }
+  private def footerRowCount(path: String): Long =
+    graft.exec.ParquetOpen.rowCount(new Path(path), spark.sparkContext.hadoopConfiguration)
 }

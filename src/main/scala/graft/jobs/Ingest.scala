@@ -2,8 +2,6 @@ package graft.jobs
 
 import java.util.UUID
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.QuantileSketchAgg.sketch_agg
@@ -304,12 +302,8 @@ final class Ingest(table: GraftTable) {
     }
   }
 
-  private def footerRowCount(path: String): Long = {
-    val in = HadoopInputFile.fromPath(new Path(path),
-      spark.sparkContext.hadoopConfiguration)
-    val reader = ParquetFileReader.open(in)
-    try reader.getRecordCount finally reader.close()
-  }
+  private def footerRowCount(path: String): Long =
+    graft.exec.ParquetOpen.rowCount(new Path(path), spark.sparkContext.hadoopConfiguration)
 }
 
 object Ingest {

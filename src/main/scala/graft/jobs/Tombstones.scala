@@ -62,10 +62,8 @@ object Tombstones {
 
     // key counts from parquet footers — no Spark job per file
     val refs = moved.map { case (pid, path) =>
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new Path(path), spark.sparkContext.hadoopConfiguration)
-      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      val cnt = try reader.getRecordCount finally reader.close()
+      val cnt = graft.exec.ParquetOpen.rowCount(new Path(path),
+        spark.sparkContext.hadoopConfiguration)
       FileReference(new Path(path).getName, pid, cnt)
     }.toSeq
     // write-only mode (MERGE INTO): the caller owns the commit

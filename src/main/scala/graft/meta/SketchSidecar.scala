@@ -150,18 +150,9 @@ object SketchSidecar {
     * footer read, paid once per file lifetime instead of once per
     * last-page query).
     */
-  def rowGroupsEntry(dataFile: String): (String, Array[Byte]) = {
-    val conf = GraftFS.conf
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(dataFile), conf))
-    try {
-      import scala.jdk.CollectionConverters._
-      val groups = r.getFooter.getBlocks.asScala.toSeq
-        .map(b => (b.getStartingPos, b.getRowCount))
-      rowGroupsEntryName -> encodeRowGroups(groups)
-    } finally r.close()
-  }
+  def rowGroupsEntry(dataFile: String): (String, Array[Byte]) =
+    rowGroupsEntryName -> encodeRowGroups(graft.exec.ParquetOpen.rowGroups(
+      new org.apache.hadoop.fs.Path(dataFile), GraftFS.conf))
 
   final case class StringStats(nonNullCount: Long, min: String, max: String)
 

@@ -90,37 +90,70 @@ final class GraftTable(
     * final projection (keys always kept) and the SQL post-stage. No key
     * literal enters the plan otherwise, so lookups of different keys
     * share one generated class.
+    *
+    * A tiny point scan — at most [[Region.ManyPoints]] point keys whose
+    * scan plans one input partition, holding at most
+    * [[graft.sources.LocalPointScan.MaxRows]] rows — is read on the
+    * driver when this DataFrame is built, from the handle's loaded
+    * snapshot, by the same scan readers
+    * ([[graft.sources.LocalPointScan]]). The layers above then sit over
+    * those rows with no sort added (one partition's rows are already in
+    * key order), and collecting them runs no Spark job. Every other query
+    * reads its scan when an action runs, sorted within partitions by key.
     */
-  def query(q: graft.query.GraftQuery): DataFrame = {
+  def query(q: graft.query.GraftQuery): DataFrame = plan(q, tryLocal = true)
+
+  /** [[query]]'s job arm alone: the relation plan over the scan, which
+    * [[query]] returns for every query the driver-local arm declines.
+    */
+  private[graft] def relationQuery(q: graft.query.GraftQuery): DataFrame =
+    plan(q, tryLocal = false)
+
+  private def plan(q: graft.query.GraftQuery, tryLocal: Boolean): DataFrame = {
     import org.apache.spark.sql.functions.col
     import graft.transforms.TransformFactory
     val regions = q.regions.map(_.canonical)
-    val scan = org.apache.spark.sql.graft.bridge.relationDataFrame(spark,
-      new graft.sources.GraftBatchTable(dir, loaded = Some(store), baseRegions = regions))
+    val table = new graft.sources.GraftBatchTable(dir, loaded = Some(store), baseRegions = regions)
     val tableTransform = TransformFactory.parse(store.transformConfig, schema, config.userJarsDir)
     val queryTransform = q.queryTransformConfig.flatMap(
       TransformFactory.parse(_, schema, config.userJarsDir))
     def withValues(df: DataFrame, keep: String => Boolean): DataFrame =
       df.select((schema.keyNames ++ schema.valueNames.filter(keep)).map(col): _*)
-    val read = q.requestedValueFields match {
+    val readValue: String => Boolean = q.requestedValueFields match {
       case Some(req) =>
-        val need = req.toSet ++ (tableTransform ++ queryTransform).flatMap(_.requiredValueFields)
-        withValues(scan, need)
-      case None => scan
+        req.toSet ++ (tableTransform ++ queryTransform).flatMap(_.requiredValueFields)
+      case None => _ => true
     }
+    val local =
+      if (!tryLocal) None
+      else {
+        val names = (schema.keyNames ++ schema.valueNames.filter(readValue)).toSet
+        val required = org.apache.spark.sql.types.StructType(
+          table.schema().fields.filter(f => names(f.name)))
+        graft.sources.LocalPointScan.decide(table, regions, required).rows
+          .map(org.apache.spark.sql.graft.bridge.localRelationDataFrame(spark, required, _))
+      }
+    val scan = local.getOrElse(org.apache.spark.sql.graft.bridge.relationDataFrame(spark, table))
+    val read = if (q.requestedValueFields.isEmpty) scan else withValues(scan, readValue)
     val inRegions =
       if (Region.keyBatch(regions).isEmpty) read else read.filter(Region.anyOf(regions))
     val hooks: Seq[DataFrame => DataFrame] =
       (tableTransform ++ queryTransform).toSeq.map(t => t.apply _) ++ q.queryTimeTransform
     val out = hooks.foldLeft(inRegions)((df, f) => f(df))
     val projected = q.requestedValueFields.fold(out)(req => withValues(out, req.contains))
-    val sorted = projected.sortWithinPartitions(schema.keyNames.map(col): _*)
+    // a sort over the local rows would plan a job; they are in key order
+    val sorted =
+      if (local.isDefined) projected
+      else projected.sortWithinPartitions(schema.keyNames.map(col): _*)
     q.postSql.map(graft.query.SqlStage.overResults(spark, sorted, _)).getOrElse(sorted)
   }
 
   /** Point lookup: rows whose row key equals the given values (schema
     * order) — the reference's headline ~0.5s use case (README.md:16-17);
-    * plans to exactly the leaves holding the keys.
+    * plans to exactly the leaves holding the keys. Keys in one leaf, with
+    * at most [[graft.sources.LocalPointScan.MaxRows]] rows between them,
+    * are read on the driver when the DataFrame is built, from the
+    * handle's loaded snapshot, with no sort added: see [[query]].
     */
   def lookup(keyValues: Any*): DataFrame =
     query(graft.query.GraftQuery.forKeys(schema, keyValues))

@@ -666,11 +666,7 @@ object VectorFunctions {
       conf: org.apache.hadoop.conf.Configuration): Long =
     graft.meta.GraftFS.list(dir)
       .filter(_.getPath.getName.endsWith(".parquet"))
-      .map { f =>
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f.getPath, conf)
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try r.getRecordCount finally r.close()
-      }.sum
+      .map(f => graft.exec.ParquetOpen.rowCount(f.getPath, conf)).sum
 
   /** The index's LIVE inverted-list rows: lists minus tombstone-shadowed
     * entries. The anti-join BROADCASTS the delete set only while its

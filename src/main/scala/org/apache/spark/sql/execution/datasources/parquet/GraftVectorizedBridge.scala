@@ -1,16 +1,15 @@
 package org.apache.spark.sql.execution.datasources.parquet
 
-import java.lang.reflect.{InvocationHandler, Method, Proxy}
+import java.lang.reflect.{Field, InvocationHandler, Method, Proxy}
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.filter2.compat.FilterCompat
 import org.apache.parquet.filter2.predicate.FilterPredicate
 import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.MessageType
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
 
 /** Bridge into Spark's vectorized parquet reader for the graft DSv2
@@ -31,11 +30,20 @@ import org.apache.spark.sql.types.StructType
   * LocalClusterSpec under local-cluster, invisible under local[N]).
   * The seam is therefore crossed reflectively: a `java.lang.reflect
   * .Proxy` defined in the INTERFACE's own classloader implements the
-  * package-private interface, and the protected `initialize` is invoked
-  * via setAccessible — everything else referenced here is public, so
-  * the bridge is classloader-safe however the jar is deployed. (The
-  * Scala-side bridges — ExpressionUtils, RowToColumnConverter — need no
-  * such treatment: Scala `private[sql]` erases to public bytecode.)
+  * package-private interface, and the reader's protected fields and
+  * private `initializeInternal` are reached via setAccessible —
+  * everything else referenced here is public, so the bridge is
+  * classloader-safe however the jar is deployed. (The Scala-side
+  * bridges — ExpressionUtils, RowToColumnConverter — need no such
+  * treatment: Scala `private[sql]` erases to public bytecode.)
+  *
+  * The bridge does NOT call the 4-argument `initialize` overload, though
+  * that overload sets exactly the fields it needs: in Spark 4.1.2 the
+  * overload builds a `new Configuration()` on every call, which loads
+  * and parses the Hadoop XML resources, the largest single cost of a
+  * point lookup's open. The bridge sets the same eight fields itself,
+  * with one process-wide configuration carrying the same five flags
+  * ([[readerConf]]), then runs the reader's own `initializeInternal`.
   */
 object GraftVectorizedBridge {
 
@@ -47,11 +55,56 @@ object GraftVectorizedBridge {
       .getOrElse(throw new IllegalStateException(
         "SpecificParquetRecordReaderBase.ParquetRowGroupReader not found — Spark internals moved"))
 
-  private lazy val initializeMethod: Method = {
-    val m = baseClass.getDeclaredMethod("initialize",
-      classOf[MessageType], classOf[MessageType], rowGroupReaderIface, java.lang.Integer.TYPE)
+  /** The configuration every bridged reader holds: built once per
+    * process, with the five flags the 4-argument `initialize` sets on its
+    * own fresh copy, so the reader sees the same values. Readers only
+    * read it.
+    */
+  private lazy val readerConf: Configuration = {
+    val c = new Configuration()
+    Seq(SQLConf.PARQUET_BINARY_AS_STRING, SQLConf.PARQUET_INT96_AS_TIMESTAMP,
+      SQLConf.CASE_SENSITIVE, SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED,
+      SQLConf.LEGACY_PARQUET_NANOS_AS_LONG).foreach(e => c.setBoolean(e.key, false))
+    c
+  }
+
+  private def field(name: String): Field = {
+    val f = baseClass.getDeclaredField(name)
+    f.setAccessible(true)
+    f
+  }
+  private lazy val readerField = field("reader")
+  private lazy val fileSchemaField = field("fileSchema")
+  private lazy val requestedSchemaField = field("requestedSchema")
+  private lazy val configurationField = field("configuration")
+  private lazy val parquetColumnField = field("parquetColumn")
+  private lazy val sparkSchemaField = field("sparkSchema")
+  private lazy val sparkRequestedSchemaField = field("sparkRequestedSchema")
+  private lazy val totalRowCountField = field("totalRowCount")
+
+  private lazy val initializeInternal: Method = {
+    val m = classOf[VectorizedParquetRecordReader].getDeclaredMethod("initializeInternal")
     m.setAccessible(true)
     m
+  }
+
+  /** What the 4-argument `initialize` overload does, with [[readerConf]]
+    * in place of a fresh `Configuration`.
+    */
+  private def initialize(vec: VectorizedParquetRecordReader, fileSchema: MessageType,
+      requested: MessageType, fileReader: ParquetFileReader, rows: Int): Unit = {
+    val column = new ParquetToSparkSchemaConverter(readerConf)
+      .convertParquetColumn(requested, None)
+    val sparkSchema = column.sparkType.asInstanceOf[StructType]
+    readerField.set(vec, rowGroupReaderFor(fileReader))
+    fileSchemaField.set(vec, fileSchema)
+    requestedSchemaField.set(vec, requested)
+    configurationField.set(vec, readerConf)
+    parquetColumnField.set(vec, column)
+    sparkSchemaField.set(vec, sparkSchema)
+    sparkRequestedSchemaField.set(vec, sparkSchema)
+    totalRowCountField.setLong(vec, rows.toLong)
+    initializeInternal.invoke(vec)
   }
 
   /** A ParquetRowGroupReader delegating to `fileReader`, defined in the
@@ -94,15 +147,14 @@ object GraftVectorizedBridge {
     * caller's order; None when the batch order already matches.
     */
   def open(path: String, columns: StructType, rowGroupFilter: Option[FilterPredicate],
-      capacity: Int, conf: Configuration = new Configuration(),
+      capacity: Int, conf: Configuration,
       fileRange: Option[(Long, Long)] = None)
       : (VectorizedParquetRecordReader, Option[Array[Int]]) = {
-    val hPath = new Path(path)
-    val optsB = HadoopReadOptions.builder(conf, hPath)
-    rowGroupFilter.foreach(p => optsB.withRecordFilter(FilterCompat.get(p)))
-    fileRange.foreach { case (s, e) => optsB.withRange(s, e) }
-    optsB.useColumnIndexFilter(true)
-    val fileReader = ParquetFileReader.open(HadoopInputFile.fromPath(hPath, conf), optsB.build())
+    val fileReader = graft.exec.ParquetOpen(new Path(path), conf, { opts =>
+      rowGroupFilter.foreach(p => opts.withRecordFilter(FilterCompat.get(p)))
+      fileRange.foreach { case (s, e) => opts.withRange(s, e) }
+      opts.useColumnIndexFilter(true)
+    })
     try {
       val fileSchema = fileReader.getFooter.getFileMetaData.getSchema
       val inFile = (0 until fileSchema.getFieldCount)
@@ -130,8 +182,7 @@ object GraftVectorizedBridge {
       val rows = fileReader.getFilteredRecordCount // rows of the pages kept
       require(rows <= Int.MaxValue, s"file too large for one vectorized task: $rows rows")
       val vec = new VectorizedParquetRecordReader(false, capacity)
-      initializeMethod.invoke(vec, fileSchema, requested,
-        rowGroupReaderFor(fileReader), Int.box(rows.toInt))
+      initialize(vec, fileSchema, requested, fileReader, rows.toInt)
       vec.initBatch(StructType(missing),
         new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(missing.length))
       vec.enableReturningBatches()

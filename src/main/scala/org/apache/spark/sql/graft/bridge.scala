@@ -48,4 +48,15 @@ object bridge {
       org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation.create(
         table, None, None,
         org.apache.spark.sql.util.CaseInsensitiveStringMap.empty()))
+
+  /** A DataFrame over rows already read on the driver (a LocalRelation
+    * of copied InternalRows matching `schema`): projections and filters
+    * above it fold into the relation, so `collect()` runs no job.
+    */
+  def localRelationDataFrame(spark: SparkSession, schema: StructType,
+      rows: Seq[InternalRow]): DataFrame =
+    org.apache.spark.sql.classic.Dataset.ofRows(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
+      org.apache.spark.sql.catalyst.plans.logical.LocalRelation(
+        org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes(schema), rows))
 }

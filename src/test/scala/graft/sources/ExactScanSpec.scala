@@ -58,11 +58,14 @@ class ExactScanSpec extends AnyFunSuite {
       deleted: Set[(Long, Long)] = Set.empty): Unit = {
     val want = rows.filter(r => expected(r) && !deleted((r._1, r._2)))
     assert(want.nonEmpty, name)
-    val (rowMerge, native) = (tables._1.query(q), tables._2.query(q))
+    // the relation plan, which a one-leaf point query skips for a local read
+    val (rowMerge, native) = (tables._1.relationQuery(q), tables._2.relationQuery(q))
     assert(columnar(rowMerge) == Seq(false), s"$name: uncompacted leaves take the row merge")
     assert(columnar(native) == Seq(true), s"$name: compacted leaves take the columnar reader")
     assert(got(rowMerge) == want, name)
     assert(got(native) == want, name)
+    assert(got(tables._1.query(q)) == want, name)
+    assert(got(tables._2.query(q)) == want, name)
   }
 
   test("every read path returns exactly the rows in the query regions") {
@@ -132,7 +135,8 @@ class ExactScanSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.debug.codegenStringSeq
     def filters(df: DataFrame): Seq[FilterExec] =
       df.queryExecution.executedPlan.collect { case f: FilterExec => f }
-    val (a, b) = (compacted.lookup(5L, 7L), compacted.lookup(150L, 299L))
+    val (a, b) = (compacted.relationQuery(GraftQuery.forKeys(schema, Seq(5L, 7L))),
+      compacted.relationQuery(GraftQuery.forKeys(schema, Seq(150L, 299L))))
     assert(filters(a).isEmpty && filters(b).isEmpty, a.queryExecution.executedPlan.toString)
     val code = codegenStringSeq(a.queryExecution.executedPlan).map(_._2)
     assert(code.nonEmpty)
@@ -150,12 +154,41 @@ class ExactScanSpec extends AnyFunSuite {
     val n = 60000L
     t.ingest(spark.range(0L, n).select(($"id" * 3L).as("k"), ($"id" * 7919L % 65521L).as("v")))
     t.compactAll()
-    val df = t.lookup(3L * 31000L)
+    val df = t.relationQuery(GraftQuery.forKeys(kv, Seq(3L * 31000L)))
     assert(df.collect().map(_.getAs[Long]("v")).toSeq == Seq(31000L * 7919L % 65521L))
     val scan = df.queryExecution.executedPlan.collectFirst { case b: BatchScanExec => b }.get
     assert(scan.supportsColumnar)
     val decoded = scan.metrics(GraftScanMetrics.RowsDecoded).value
     assert(decoded > 0 && decoded < n, s"decoded $decoded of $n rows")
     assert(scan.metrics(GraftScanMetrics.RowsEmitted).value == 1)
+  }
+
+  test("local arm: lookups of different keys run no job and return the relation plan's rows") {
+    Seq((5L, 7L), (150L, 299L)).foreach { case (k1, k2) =>
+      val q = GraftQuery.forKeys(schema, Seq(k1, k2))
+      val (local, jobs) = graft.TestSpark.jobsRun(got(compacted.lookup(k1, k2)))
+      assert(jobs == 0, s"($k1, $k2)")
+      assert(local == got(compacted.relationQuery(q)))
+      assert(local == Seq((k1, k2, k1 * 1000L + k2)))
+    }
+  }
+
+  test("local arm scan metrics: a point lookup on a compacted leaf decodes part of it, emits one row") {
+    val kv = GraftSchema(rowKeys = Seq(GraftField("k", LongType)), sortKeys = Nil,
+      values = Seq(GraftField("v", LongType)))
+    val t = GraftTable.create(spark, Files.createTempDirectory("graft-pages").toString, kv)
+    val n = 60000L
+    t.ingest(spark.range(0L, n).select(($"id" * 3L).as("k"), ($"id" * 7919L % 65521L).as("v")))
+    t.compactAll()
+    val (vs, jobs) = graft.TestSpark.jobsRun(
+      t.lookup(3L * 31000L).collect().map(_.getAs[Long]("v")).toSeq)
+    assert(vs == Seq(31000L * 7919L % 65521L))
+    assert(jobs == 0)
+    val regions = GraftQuery.forKeys(kv, Seq(3L * 31000L)).regions.map(_.canonical)
+    val view = new GraftBatchTable(t.dir, loaded = Some(t.store), baseRegions = regions)
+    val d = LocalPointScan.decide(view, regions, view.schema())
+    assert(d.arm == "local" && d.inputPartitions.contains(1))
+    assert(d.rowsDecoded > 0 && d.rowsDecoded < n, s"decoded ${d.rowsDecoded} of $n rows")
+    assert(d.rowsRead == 1)
   }
 }

@@ -222,13 +222,30 @@ class GraftSourceSpec extends AnyFunSuite {
     assert(range.select("key").as[String].collect().toSeq.sorted ==
       keys.slice(10, 20).flatMap(k => Seq(k, k)))
 
-    val lookup = table.lookup("k042")
+    val lookup = table.relationQuery(graft.query.GraftQuery.forKeys(schema, Seq("k042")))
     val plan = lookup.queryExecution.executedPlan
     assert(graftScans(lookup).size == 1, plan.toString)
     assert(plan.collect {
       case f: org.apache.spark.sql.execution.FileSourceScanExec => f
     }.isEmpty, plan.toString)
     assert(lookup.select("ts").as[Long].collect().toSeq.sorted == Seq(1L, 2L))
+  }
+
+  test("GraftTable.lookup of a one-leaf key reads it locally, as the columnar path does") {
+    val dir = tmp()
+    val table = GraftTable.create(spark, dir, schema)
+    val keys = (0 until 100).map(i => f"k$i%03d")
+    table.ingest(batch(keys.map(k => (k, 1L, 1L, Map("x" -> 1L))): _*))
+    table.ingest(batch(keys.map(k => (k, 2L, 2L, Map.empty[String, Long])): _*))
+    table.compactAll()
+
+    val (rows, jobs) = graft.TestSpark.jobsRun(table.lookup("k042")
+      .as[(String, Long, Long, Map[String, Long])].collect().toSeq)
+    assert(jobs == 0)
+    assert(rows == Seq(("k042", 1L, 1L, Map("x" -> 1L)), ("k042", 2L, 2L, Map.empty[String, Long])))
+    assert(rows == table.relationQuery(graft.query.GraftQuery.forKeys(schema, Seq("k042")))
+      .as[(String, Long, Long, Map[String, Long])].collect().toSeq)
+    assert(table.lookup("k042").select("ts").as[Long].collect().toSeq.sorted == Seq(1L, 2L))
   }
 
   test("vectorized fast path activates on a fully-compacted table and matches the row path") {
